@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from forgettable_spark import operators as ops
 from forgettable_spark.functions.decay import GOFORGET_DEFAULT_RATE
 from forgettable_spark.functions.expiry import DEFAULT_SIGMA
-from forgettable_spark.operators.snapshot import FORGET_EVENTS_SCHEMA
+from forgettable_spark.operators.snapshot import events_frame
 
 
 def _to_us(now: datetime | int | None) -> int:
@@ -228,4 +228,4 @@ class ForgetTable:
 
     @classmethod
     def empty(cls, spark: SparkSession, **kwargs) -> "ForgetTable":
-        return cls(spark, spark.createDataFrame([], FORGET_EVENTS_SCHEMA), **kwargs)
+        return cls(spark, events_frame(spark, []), **kwargs)

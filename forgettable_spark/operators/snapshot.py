@@ -11,9 +11,11 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: forget_events schema (FIXTURES.md A1).
 FORGET_EVENTS_SCHEMA = T.StructType(
@@ -24,6 +26,21 @@ FORGET_EVENTS_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), False),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(FORGET_EVENTS_SCHEMA)
+
+
+def events_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Driver-side ``(distribution, bin, n, ts)`` rows as a ``forget_events``
+    DataFrame held in the JVM.
+
+    The rows go over as one Arrow table, which Spark keeps as a
+    ``LocalRelation`` (planned as a ``LocalTableScan``, no Python stage)
+    below ``spark.sql.execution.arrow.localRelationThreshold``. Arrow
+    reads a naive ``ts`` as UTC, as ``api._to_us`` reads a naive ``now``;
+    pyspark's row conversion would read it in the host's local zone.
+    """
+    table = pa.table(list(zip(*rows)) or [()] * len(_ARROW_SCHEMA), schema=_ARROW_SCHEMA)
+    return spark.createDataFrame(table, FORGET_EVENTS_SCHEMA)
 
 
 def incr_events(
@@ -38,9 +55,17 @@ def incr_events(
     One row per field, each of weight ``n`` — the reference adds ``n`` to
     every named field and ``n·len(fields)`` to Z (``goforget/forget.go:
     31-69``); here Z is derived so only the per-bin rows exist.
+
+    Arrow, not a list: ``createDataFrame(list)`` makes a pickled Python
+    RDD of ``defaultParallelism`` partitions, so every later read of the
+    grown log scans one more Python RDD per write and starts Python
+    workers to unpickle it. A ``LocalRelation`` (:func:`events_frame`)
+    lets Catalyst fold a read's ``distribution = d`` filter into each
+    increment at plan time and drop the increments of other
+    distributions, so a read touches only the writes to its own
+    distribution.
     """
-    rows = [(distribution, f, n, ts) for f in fields]
-    return spark.createDataFrame(rows, FORGET_EVENTS_SCHEMA)
+    return events_frame(spark, [(distribution, f, n, ts) for f in fields])
 
 
 def incr(events: DataFrame, new_events: DataFrame) -> DataFrame:

@@ -41,9 +41,14 @@ Documented differences (engine semantics, not route semantics):
 
 Scale posture: this edge serves *point* reads — every route touches one
 distribution, so the underlying plans are partition-pruned scans
-collecting a handful of rows. The server is a parity/demo surface;
-high-QPS serving would front a compacted, bucketed snapshot with the
-same operators.
+collecting a handful of rows. Each ``/incr`` appends a JVM-side
+``LocalRelation``; a read's ``distribution = d`` filter is folded into
+every appended relation at plan time and the ones of other
+distributions drop out, so read cost does not depend on how many
+writes went to other distributions. Every ``CHECKPOINT_EVERY`` (64)
+appends the served log is folded by ``localCheckpoint``. The server is
+a parity/demo surface; high-QPS serving would front a compacted,
+bucketed snapshot with the same operators.
 """
 
 from __future__ import annotations
@@ -55,15 +60,22 @@ from urllib.parse import parse_qs, urlparse
 
 from forgettable_spark.api import ForgetTable
 
+#: Appends between two ``localCheckpoint`` folds of the served event plan.
+CHECKPOINT_EVERY = 64
+
 _ORDERED_ROUTES = ("/incr", "/dist", "/get", "/nmostprobable", "/dbsize", "/ping", "/exit")
 
 
 class ForgetHTTPServer:
     """Serve a :class:`ForgetTable` over the reference's HTTP routes.
 
-    ``incr`` swaps the underlying (immutable) table under a lock; every
-    64 appends the event plan is localCheckpoint-ed so a long-lived
-    server does not accrete an unbounded union lineage.
+    ``incr`` swaps the underlying (immutable) table under a lock. Each
+    append is one small JVM-side relation (``operators.snapshot.
+    events_frame``) that a read of another distribution folds away at
+    plan time, so a read's cost does not grow with the writes to other
+    distributions. Every :data:`CHECKPOINT_EVERY` appends the event plan
+    is localCheckpoint-ed so a long-lived server does not accrete an
+    unbounded union lineage.
 
     ``stop_spark_on_exit=True`` makes ``/exit`` also stop the
     SparkSession (the reference's ``/exit`` ends the whole process —
@@ -76,12 +88,10 @@ class ForgetHTTPServer:
         host: str = "127.0.0.1",
         port: int = 0,
         stop_spark_on_exit: bool = False,
-        checkpoint_every: int = 64,
     ):
         self._table = table
         self._lock = threading.Lock()
         self._appends = 0
-        self._checkpoint_every = checkpoint_every
         self._stop_spark_on_exit = stop_spark_on_exit
         handler = _make_handler(self)
         self._httpd = ThreadingHTTPServer((host, port), handler)
@@ -122,7 +132,7 @@ class ForgetHTTPServer:
         with self._lock:
             new = self._table.incr(distribution, fields, n=n)
             self._appends += 1
-            if self._checkpoint_every and self._appends % self._checkpoint_every == 0:
+            if self._appends % CHECKPOINT_EVERY == 0:
                 new = new._with_events(new.events.localCheckpoint(eager=False))
             self._table = new
 

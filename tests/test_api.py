@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timezone
 
 import pytest
@@ -89,3 +90,37 @@ def test_json_payload_shape(ft):
     doc = json.loads(payload[0]["json"])
     assert doc["distribution"] == "colors"
     assert {d["bin"] for d in doc["data"]} == {"red", "blue"}
+
+
+def _plan(df, phase: str) -> str:
+    """A query-execution plan as text, with expression ids blanked so
+    plans built by separate calls compare equal."""
+    return re.sub(r"#\d+L?", "#", getattr(df._jdf.queryExecution(), phase)().toString())
+
+
+def test_incr_rows_fold_out_of_other_distributions_reads(spark, tmp_path):
+    """Appended rows are JVM-side relations: no read scans a Python RDD,
+    and a read of a distribution no incr touched plans exactly as
+    before any write (the increments of other distributions drop out)."""
+    path = str(tmp_path / "log")
+    spark.createDataFrame(
+        [("base", "x", 3, T0), ("colors", "red", 1, T0)],
+        "distribution string, bin string, n long, ts timestamp",
+    ).write.parquet(path)
+    before = ForgetTable(spark, path, rate=0.5)
+    ft = before
+    for i in range(3):
+        ft = ft.incr("colors", ["red", "blue"], n=2, ts=T0).incr(f"other{i}", ["z"], ts=T0)
+
+    for df in (
+        ft.dist("colors", now=T0),
+        ft.get("colors", ["red"], now=T0),
+        ft.n_most_probable("colors", n=1, now=T0),
+    ):
+        assert df.collect()
+        assert "ExistingRDD" not in _plan(df, "executedPlan")
+
+    untouched = _plan(ft.dist("base", now=T0), "optimizedPlan")
+    assert "Union" not in untouched and "LocalRelation" not in untouched
+    assert untouched == _plan(before.dist("base", now=T0), "optimizedPlan")
+    assert {r["bin"]: r["count"] for r in ft.dist("colors", now=T0).collect()} == {"red": 7, "blue": 6}

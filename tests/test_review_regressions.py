@@ -4,6 +4,7 @@ sampler stall, and decay-mode plumbing through every read verb.
 
 from __future__ import annotations
 
+import time
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
@@ -64,6 +65,26 @@ def test_naive_datetime_is_utc(spark):
         for r in ft.dist("c", now=(T0 + timedelta(seconds=10)).replace(tzinfo=None)).collect()
     }
     assert aware == naive == {"r": 5}
+
+
+@pytest.fixture()
+def host_tz_new_york(monkeypatch):
+    """Run with the host's local zone set to America/New_York."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_naive_incr_ts_is_utc_on_non_utc_host(spark, host_tz_new_york):
+    """A naive incr `ts` must mean UTC, like a naive `now`: pyspark's
+    row conversion used to read it in the host's zone, which put this
+    write 4 h in the future of the read and left it undecayed (r=10)."""
+    t0 = datetime(2024, 6, 1, 12, 0, 0)
+    ft = ForgetTable.empty(spark, rate=0.2).incr("c", ["r"], n=10, ts=t0)
+    rows = {r["bin"]: r["count"] for r in ft.dist("c", now=t0 + timedelta(seconds=10)).collect()}
+    assert rows == {"r": 8}
 
 
 def test_stratified_sample_threshold_rounds_like_oracle(spark):

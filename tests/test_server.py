@@ -15,7 +15,7 @@ from datetime import datetime, timezone
 import pytest
 
 from forgettable_spark.api import ForgetTable
-from forgettable_spark.server import ForgetHTTPServer
+from forgettable_spark.server import CHECKPOINT_EVERY, ForgetHTTPServer
 
 T0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
 T0_SEC = int(T0.timestamp())
@@ -180,6 +180,33 @@ def test_incr_then_read_back(spark):
         # engine validates N >= 1 -> reference's "FAIL" text path
         status, body = _get(base, "/incr?distribution=pets&field=dog&N=0")
         assert (status, body) == (500, b"FAIL")
+    finally:
+        srv.stop()
+
+
+def test_reads_after_checkpoint_fold(spark):
+    """More appends than CHECKPOINT_EVERY cross the localCheckpoint fold
+    of the served log; reads after it still see every acknowledged write."""
+    srv = ForgetHTTPServer(_colors_table(spark))
+    expected: dict[str, int] = {}
+    for i in range(CHECKPOINT_EVERY + 5):
+        fields = [f"b{i % 3}", f"b{i % 5}"] if i % 2 else [f"b{i % 7}"]
+        srv.apply_incr("fold", fields, n=i + 1)
+        for f in fields:
+            expected[f] = expected.get(f, 0) + i + 1
+    assert "LogicalRDD" in srv.table().events._jdf.queryExecution().logical().toString()
+    host, port = srv.start()
+    base = f"http://{host}:{port}"
+    try:
+        _, env = _get_json(base, "/dist?distribution=fold&rate=0")
+        got = {d["bin"]: d["count"] for d in env["data"]["data"]}
+        assert got == expected
+        assert env["data"]["Z"] == sum(expected.values())
+        _, env = _get_json(base, "/get?distribution=fold&field=b1&field=b4&rate=0")
+        got = {d["bin"]: d["count"] for d in env["data"]["data"]}
+        assert got == {"b1": expected["b1"], "b4": expected["b4"]}
+        _, env = _get_json(base, "/get?distribution=colors&field=red&rate=0")
+        assert env["data"]["data"][0]["count"] == 3
     finally:
         srv.stop()
 
